@@ -16,6 +16,8 @@ vectorized, and reduce with ``np.add.at`` / ``np.minimum.at``.
 
 from __future__ import annotations
 
+import functools
+
 import numpy as np
 
 __all__ = [
@@ -61,6 +63,13 @@ def ring_is_closed(ring: np.ndarray) -> bool:
     return len(r) >= 4 and bool(np.all(r[0] == r[-1]))
 
 
+def _next(a: np.ndarray) -> np.ndarray:
+    """np.roll(a, -1, axis=0) without its generic-axis overhead (the
+    per-ring helpers below run once per feature in the dissolve and
+    validity passes, on rings of a handful of vertices)."""
+    return np.concatenate((a[1:], a[:1]))
+
+
 def ring_area(ring: np.ndarray) -> float:
     """Signed shoelace area (CCW positive). Replaces st_area
     (C_…R:98) for whole polygons."""
@@ -68,7 +77,7 @@ def ring_area(ring: np.ndarray) -> float:
     if len(r) < 3:
         return 0.0
     x, y = r[:, 0], r[:, 1]
-    return float(0.5 * np.sum(x * np.roll(y, -1) - np.roll(x, -1) * y))
+    return float(0.5 * np.sum(x * _next(y) - _next(x) * y))
 
 
 def point_in_ring(px: np.ndarray, py: np.ndarray, ring: np.ndarray) -> np.ndarray:
@@ -453,7 +462,7 @@ def orient_ccw(ring: np.ndarray) -> np.ndarray:
     """Open ring, oriented counter-clockwise."""
     r = _open_ring(ring)
     x, y = r[:, 0], r[:, 1]
-    a = 0.5 * np.sum(x * np.roll(y, -1) - np.roll(x, -1) * y)
+    a = 0.5 * np.sum(x * _next(y) - _next(x) * y)
     return r if a >= 0 else r[::-1]
 
 
@@ -462,8 +471,8 @@ def is_convex(ring: np.ndarray) -> bool:
     r = orient_ccw(ring)
     if len(r) < 3:
         return False
-    d = np.roll(r, -1, axis=0) - r
-    cross = d[:, 0] * np.roll(d[:, 1], -1) - d[:, 1] * np.roll(d[:, 0], -1)
+    d = _next(r) - r
+    cross = d[:, 0] * _next(d[:, 1]) - d[:, 1] * _next(d[:, 0])
     return bool((cross >= -1e-9 * np.abs(cross).max()).all()) if len(d) else False
 
 
@@ -901,6 +910,17 @@ def polyline_is_valid(ring: np.ndarray) -> bool:
     return bool((np.abs(np.diff(r, axis=0)).sum(axis=1) > 0).all())
 
 
+@functools.lru_cache(maxsize=256)
+def _nonadjacent_edges(n: int) -> tuple[np.ndarray, np.ndarray]:
+    """Index pairs (i, j), i < j, of the non-adjacent edges of an open
+    n-vertex ring (edge k runs from vertex k to vertex k+1)."""
+    i, j = np.triu_indices(n, k=2)
+    keep = ~((i == 0) & (j == n - 1))  # first/last edges are adjacent
+    i, j = i[keep], j[keep]
+    i.flags.writeable = j.flags.writeable = False  # shared by every call
+    return i, j
+
+
 def ring_is_valid(ring: np.ndarray) -> bool:
     """Closed, ≥4 raw vertices, finite coords, non-zero area, and no
     self-intersection between non-adjacent edges."""
@@ -912,11 +932,8 @@ def ring_is_valid(ring: np.ndarray) -> bool:
     r = raw[:-1]
     if len(r) < 3 or abs(ring_area(raw)) <= 0.0:
         return False
-    n = len(r)
-    p2 = np.roll(r, -1, axis=0)
-    i, j = np.triu_indices(n, k=2)
-    keep = ~((i == 0) & (j == n - 1))  # first/last edges are adjacent
-    i, j = i[keep], j[keep]
+    p2 = _next(r)
+    i, j = _nonadjacent_edges(len(r))
     hit = _segments_properly_intersect(
         r[i, 0], r[i, 1], p2[i, 0], p2[i, 1],
         r[j, 0], r[j, 1], p2[j, 0], p2[j, 1],

@@ -31,6 +31,8 @@ Semantic parity notes (SURVEY.md §2.2 P7, §2.5 A4):
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -48,7 +50,8 @@ _CORR_MARK = "__dissolve_fallback__"
 
 
 def dissolve_corrections_df(polys: DataFrame, layer_col: str = "layer",
-                            tile_size: float = 5000.0) -> DataFrame:
+                            tile_size: float = 5000.0,
+                            validity_filter: bool = False) -> DataFrame:
     """Inclusion–exclusion correction polygons per layer (st_union
     semantics, C_…R:99,154 — VERDICT r01 #8): a grouped pass over the
     feature table emits weighted pseudo-features (weight ±1, theta year
@@ -68,7 +71,17 @@ def dissolve_corrections_df(polys: DataFrame, layer_col: str = "layer",
     (max minx, max miny) over member bboxes, pure maxima of input
     doubles, identical in every replica (kernels.overlap_corrections
     with_owner). All members of a subset overlap that corner's tile by
-    construction, so the owning tile always sees the whole subset."""
+    construction, so the owning tile always sees the whole subset.
+
+    One Python pass per shuffle partition: the rows are hash-
+    partitioned and sorted on (layer, tile), and a single mapInPandas
+    call walks its partition's groups in order and streams their
+    corrections out — per-group Arrow round trips (applyInPandas) cost
+    several times the kernel work on small tiles. A group cut by an
+    Arrow batch boundary is held over to the next batch, so a worker
+    holds at most one group plus one batch. With `validity_filter`,
+    invalid features (st_is_valid, C_…R:317) are dropped inside that
+    pass, before the kernel, instead of in a separate UDF stage."""
     schema = T.StructType([
         T.StructField("feature_id", T.LongType()),
         T.StructField(layer_col, T.StringType()),
@@ -77,6 +90,7 @@ def dissolve_corrections_df(polys: DataFrame, layer_col: str = "layer",
         T.StructField("weight", T.DoubleType()),
     ])
     ts = float(tile_size)
+    keys = (layer_col, "_tx", "_ty")
 
     def _fn(pdf: pd.DataFrame) -> pd.DataFrame:
         layer = pdf[layer_col].iloc[0]
@@ -90,6 +104,11 @@ def dissolve_corrections_df(polys: DataFrame, layer_col: str = "layer",
             pd.Series([f"{layer}|{tx}|{ty}"])).iloc[0]) % (1 << 42) + 1) << 20)
         rings = [K.feature_parts(g) for g in pdf["geom"]]
         years = pdf["poly_year"].to_numpy(np.int64)
+        if validity_filter:
+            keep = np.array([all(K.ring_is_valid(p) for p in f)
+                             for f in rings], dtype=bool)
+            rings = [r for r, k in zip(rings, keep) if k]
+            years = years[keep]
         try:
             corrs = K.overlap_corrections(rings, years, with_owner=True)
         except K.DissolveFallback:
@@ -111,6 +130,32 @@ def dissolve_corrections_df(polys: DataFrame, layer_col: str = "layer",
             i += 1
         return pd.DataFrame(rows, columns=[f.name for f in schema.fields])
 
+    def _groups(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        held: list[pd.DataFrame] = []  # the open group's rows so far
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            lay, tx, ty = (pdf[c].to_numpy() for c in keys)
+            cuts = np.flatnonzero((lay[1:] != lay[:-1]) | (tx[1:] != tx[:-1])
+                                  | (ty[1:] != ty[:-1])) + 1
+            bounds = [0, *cuts.tolist(), len(pdf)]
+            out = []
+            for lo, hi in zip(bounds[:-1], bounds[1:]):
+                seg = pdf.iloc[lo:hi]
+                if held and tuple(held[-1][list(keys)].iloc[-1]) \
+                        != tuple(seg[list(keys)].iloc[0]):
+                    out.append(_fn(pd.concat(held, ignore_index=True)))
+                    held = []
+                held.append(seg)
+                if hi < len(pdf):  # the next row starts another group
+                    out.append(_fn(pd.concat(held, ignore_index=True)))
+                    held = []
+            out = [o for o in out if len(o)]
+            if out:
+                yield pd.concat(out, ignore_index=True)
+        if held:
+            yield _fn(pd.concat(held, ignore_index=True))
+
     xs = F.flatten(F.expr("transform(geom, p -> filter(p, (v, i) -> i % 2 = 0))"))
     ys = F.flatten(F.expr("transform(geom, p -> filter(p, (v, i) -> i % 2 = 1))"))
     d = (polys.select("feature_id", layer_col, F.col("poly_year"), "geom")
@@ -126,7 +171,8 @@ def dissolve_corrections_df(polys: DataFrame, layer_col: str = "layer",
                   F.explode(tiles).alias("_t"))
          .select("feature_id", layer_col, "poly_year", "geom",
                  F.col("_t.tx").alias("_tx"), F.col("_t.ty").alias("_ty")))
-    return d.groupBy(layer_col, "_tx", "_ty").applyInPandas(_fn, schema)
+    return (d.repartition(*keys).sortWithinPartitions(*keys)
+            .mapInPandas(_groups, schema))
 
 
 def _union_area_raster(px: float, py: float, radius: float,
@@ -149,6 +195,70 @@ def _union_area_raster(px: float, py: float, radius: float,
         anyin |= par
     cell = (g[1] - g[0]) * (h[1] - h[0])
     return float((inc & anyin).sum() * cell)
+
+
+class _FeatureSide:
+    """Eager half of `areadist`: everything that depends on the feature
+    table alone — the validity filter, the dissolve corrections
+    (checkpointed), the fallback-marker collect, the duplicate-id check
+    and the join-side union. Built once, it serves any number of point
+    sets (`extract_with_resume` builds one per call, not per bucket);
+    `_areadist_apply` declares the lazy per-points plan over it."""
+
+    # the `areadist` keywords this half takes; the rest are the apply's
+    KEYWORDS = ("layer_col", "validity_filter", "broadcast_polys", "dissolve")
+
+    def __init__(self, polys: DataFrame, *, layer_col: str = "layer",
+                 validity_filter: bool = True, broadcast_polys: bool = False,
+                 dissolve: str = "auto"):
+        self.dissolve = dissolve
+        self.broadcast_polys = broadcast_polys
+        raw = polys.select(
+            F.col("feature_id"), F.col(layer_col).alias("layer"),
+            F.col("YEAR").alias("poly_year"), F.col("geom"),
+        )
+        self.pl = pl = (raw.filter(is_valid_udf()(F.col("geom")))
+                        if validity_filter else raw)
+        self.fallback_layers: list[str] = []
+        join_side = pl.withColumn("weight", F.lit(1.0)) \
+                      .withColumn("is_real", F.lit(True))
+        if dissolve == "auto":
+            # localCheckpoint (not persist): the marker collect below,
+            # the join-side union, and (if broadcasting) the geometry-
+            # index build all read it — one grouped computation, not
+            # three — and the blocks are released by the ContextCleaner
+            # when the plan is dropped, where persist() would park them
+            # in the CacheManager forever (the ADVICE r02 minhash leak
+            # pattern; checkpoint to reliable storage instead at 100 TB).
+            # The validity check runs inside the correction pass.
+            corr = dissolve_corrections_df(
+                raw, validity_filter=validity_filter).localCheckpoint(eager=True)
+            marks = corr.filter(F.col("layer").startswith(_CORR_MARK)) \
+                        .select("layer").distinct().collect()
+            self.fallback_layers = [r[0][len(_CORR_MARK):] for r in marks]
+            corr = (corr.filter(~F.col("layer").startswith(_CORR_MARK))
+                    .withColumn("is_real", F.lit(False)))
+            if self.fallback_layers:
+                # one tile's fallback sends the WHOLE layer to the raster
+                # path — drop the corrections its other tiles produced
+                corr = corr.filter(~F.col("layer").isin(self.fallback_layers))
+            if not broadcast_polys:
+                # ADVICE r03: the broadcast path's geometry index raises
+                # on duplicate feature_id, but the shuffle-join path
+                # factorizes fid inside pair_metrics_udf and would
+                # silently refine against the wrong correction ring on a
+                # salt collision. One tiny agg over the checkpointed ids
+                # keeps both paths fail-loud (negligible vs the join it
+                # protects).
+                dup = (corr.groupBy("feature_id").count()
+                       .filter(F.col("count") > 1).limit(1).count())
+                if dup:
+                    raise ValueError(
+                        "dissolve_corrections_df: correction feature_id salt "
+                        "collision across (layer, tile) groups — rerun with a "
+                        "different tile_size")
+            join_side = join_side.unionByName(corr)
+        self.join_side = join_side
 
 
 def areadist(
@@ -183,52 +293,35 @@ def areadist(
     - "raster": force the supersampled union everywhere.
     MEANAGE always uses the per-clip (non-dissolved) areas, the
     reference's dual-area-notion quirk (C_…R:154-159)."""
+    side = _FeatureSide(polys, layer_col=layer_col,
+                        validity_filter=validity_filter,
+                        broadcast_polys=broadcast_polys, dissolve=dissolve)
+    return _areadist_apply(
+        points, side, radii=radii, maxdist=maxdist, temporal=temporal,
+        age=age, keys=keys, salt=salt, pi_literal=pi_literal,
+        cell_edge_divisor=cell_edge_divisor, observation=observation)
+
+
+def _areadist_apply(
+    points: DataFrame,
+    side: _FeatureSide,
+    *,
+    radii: tuple[float, ...] = (150.0, 565.0),
+    maxdist: float = 1000.0,
+    temporal: bool = True,
+    age: bool = True,
+    keys: tuple[str, ...] = ("PKEY", "SS", "YEAR"),
+    salt: int = 0,
+    pi_literal: float = PI_LITERAL,
+    cell_edge_divisor: float = 4.0,
+    observation=None,
+) -> DataFrame:
+    """Lazy half of `areadist`: the per-points plan over a built
+    _FeatureSide. No jobs run here."""
     point_side = points.select(*keys, "x", "y")
-
-    pl = polys
-    if validity_filter:
-        pl = pl.filter(is_valid_udf()(F.col("geom")))
-    pl = pl.select(
-        F.col("feature_id"), F.col(layer_col).alias("layer"),
-        F.col("YEAR").alias("poly_year"), F.col("geom"),
-    )
-
-    fallback_layers: list[str] = []
-    join_side = pl.withColumn("weight", F.lit(1.0)) \
-                  .withColumn("is_real", F.lit(True))
-    if dissolve == "auto":
-        # localCheckpoint (not persist): the marker collect below, the
-        # join-side union, and (if broadcasting) the geometry-index
-        # build all read it — one grouped computation, not three — and
-        # the blocks are released by the ContextCleaner when the plan
-        # is dropped, where persist() would park them in the
-        # CacheManager forever (the ADVICE r02 minhash leak pattern;
-        # checkpoint to reliable storage instead at 100 TB)
-        corr = dissolve_corrections_df(pl).localCheckpoint(eager=True)
-        marks = corr.filter(F.col("layer").startswith(_CORR_MARK)) \
-                    .select("layer").distinct().collect()
-        fallback_layers = [r[0][len(_CORR_MARK):] for r in marks]
-        corr = (corr.filter(~F.col("layer").startswith(_CORR_MARK))
-                .withColumn("is_real", F.lit(False)))
-        if fallback_layers:
-            # one tile's fallback sends the WHOLE layer to the raster
-            # path — drop the corrections its other tiles produced
-            corr = corr.filter(~F.col("layer").isin(fallback_layers))
-        if not broadcast_polys:
-            # ADVICE r03: the broadcast path's geometry index raises on
-            # duplicate feature_id, but the shuffle-join path factorizes
-            # fid inside pair_metrics_udf and would silently refine
-            # against the wrong correction ring on a salt collision.
-            # One tiny agg over the checkpointed ids keeps both paths
-            # fail-loud (negligible vs the join it protects).
-            dup = (corr.groupBy("feature_id").count()
-                   .filter(F.col("count") > 1).limit(1).count())
-            if dup:
-                raise ValueError(
-                    "dissolve_corrections_df: correction feature_id salt "
-                    "collision across (layer, tile) groups — rerun with a "
-                    "different tile_size")
-        join_side = join_side.unionByName(corr)
+    pl, join_side = side.pl, side.join_side
+    dissolve, fallback_layers = side.dissolve, side.fallback_layers
+    broadcast_polys = side.broadcast_polys
 
     need_geom = dissolve == "raster" or bool(fallback_layers)
     theta = F.col("poly_year") < F.col("YEAR") if temporal else None
@@ -237,7 +330,6 @@ def areadist(
         theta=theta, broadcast_polys=broadcast_polys, salt=salt,
         keep_geom=need_geom, cell_edge_divisor=cell_edge_divisor,
     )
-
 
     if age:
         # layer-level scalar: oldest real construction year (C_…R:231)

@@ -278,17 +278,17 @@ def areadist_fused(
     corr_pdf = None
     if dissolve == "auto":
         # distributed correction build (same operator the join path
-        # uses): per (layer, coarse-tile) tasks, owner-corner
-        # exactly-once — the result is bounded (pairwise-overlap
-        # terms), so collecting it respects the broadcast gate
+        # uses): one Python pass per shuffle partition over the
+        # (layer, coarse-tile) groups, owner-corner exactly-once, with
+        # the validity check folded into that pass — the result is
+        # bounded (pairwise-overlap terms), so collecting it respects
+        # the broadcast gate
         from .areadist import _CORR_MARK, dissolve_corrections_df
         pl = polys.select("feature_id",
                           F.col(layer_col).alias("layer"),
                           F.col("YEAR").alias("poly_year"), "geom")
-        if validity_filter:
-            from .range_join import is_valid_udf
-            pl = pl.filter(is_valid_udf()(F.col("geom")))
-        corr_pdf = dissolve_corrections_df(pl).toPandas()
+        corr_pdf = dissolve_corrections_df(
+            pl, validity_filter=validity_filter).toPandas()
         marks = corr_pdf["layer"].str.startswith(_CORR_MARK)
         if marks.any():
             lay = corr_pdf.loc[marks, "layer"].iloc[0][len(_CORR_MARK):]

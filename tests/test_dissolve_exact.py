@@ -222,3 +222,156 @@ def test_tile_boundary_subset_emitted_once(spark):
     assert abs(abs(K.ring_area(ring[:-1])) - 120 * 200) < 1e-9
     assert got.iloc[0]["weight"] == -1.0
     assert got.iloc[0]["poly_year"] == 2001
+
+
+def _shifted(pdf, dx, dy, fid_offset, layer):
+    out = pdf.copy()
+    out["geom"] = [[(np.asarray(p, float).reshape(-1, 2) + [dx, dy])
+                    .ravel().tolist() for p in g] for g in pdf["geom"]]
+    out["feature_id"] = pdf["feature_id"] + fid_offset
+    out["layer"] = layer
+    return out
+
+
+def _rows(pdf):
+    return sorted((int(r.feature_id), r.layer, int(r.poly_year),
+                   tuple(tuple(p) for p in r.geom), float(r.weight))
+                  for r in pdf.itertuples())
+
+
+def test_corrections_stream_groups_across_arrow_batches(spark, overlap_frames):
+    """Two-row Arrow batches cut most (layer, tile) groups in two; the
+    groups carried across batch boundaries must give exactly the rows
+    (ids included) of the default-batch run."""
+    from extract_sf_r_parallel_spark.operators.areadist import (
+        dissolve_corrections_df,
+    )
+    _, over = overlap_frames
+    # a second layer whose pairs become triples (3-row groups never
+    # align with 2-row batches)
+    second = _shifted(over, 700.0, 300.0, 1000, "overlap_b")
+    third = _shifted(over.iloc[::2], 707.0, 305.0, 2000, "overlap_b")
+    both = pd.concat([over, second, third], ignore_index=True)
+    polys = spark.createDataFrame(both, LAYER_SCHEMA).select(
+        "feature_id", "layer", F.col("YEAR").alias("poly_year"), "geom")
+    want = dissolve_corrections_df(polys, tile_size=500.0).toPandas()
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "2")
+    try:
+        got = dissolve_corrections_df(polys, tile_size=500.0).toPandas()
+    finally:
+        spark.conf.set(key, old)
+    assert set(want["layer"]) == {"overlap", "overlap_b"}
+    assert (want["weight"] == 1.0).any()  # triple terms present
+    assert _rows(got) == _rows(want)
+
+
+def test_invalid_feature_dropped_inside_correction_pass(spark, monkeypatch):
+    """A self-intersecting (bowtie) feature overlapping a valid
+    rectangle: with validity_filter on, the correction pass drops it
+    before the kernel, so neither path builds a correction row, and
+    both still match the serial oracle."""
+    from extract_sf_r_parallel_spark.operators import areadist as A
+
+    ox, oy = synth.X_LO + 300.0, synth.Y_LO + 300.0
+    rect = np.array([[ox, oy], [ox + 30, oy], [ox + 30, oy + 20],
+                     [ox, oy + 20], [ox, oy]])
+    bow = rect + [15.0, 0.0]
+    bow[[1, 2]] = bow[[2, 1]]
+    layer = pd.DataFrame({
+        "feature_id": np.array([1, 2], np.int64), "layer": ["bow", "bow"],
+        "YEAR": np.array([2000, 2005], np.int32),
+        "geom": [[rect.ravel().tolist()], [bow.ravel().tolist()]],
+        "is_valid_truth": [True, False],
+    })
+    pts_pd = pd.DataFrame([("0", "0", 2010, ox + 20.0, oy + 10.0),
+                           ("1", "0", 2010, ox + 400.0, oy)],
+                          columns=["PKEY", "SS", "YEAR", "x", "y"])
+    pts = spark.createDataFrame(pts_pd, PTS_SCHEMA)
+    pls = spark.createDataFrame(layer, LAYER_SCHEMA)
+    raw = pls.select("feature_id", "layer",
+                     F.col("YEAR").alias("poly_year"), "geom")
+    # unfiltered, the bowtie does reach the kernel
+    assert len(A.dissolve_corrections_df(raw).toPandas()) > 0
+
+    built = []
+    real = A.dissolve_corrections_df
+
+    def spy(*a, **kw):
+        built.append(real(*a, **kw))
+        return built[-1]
+
+    monkeypatch.setattr(A, "dissolve_corrections_df", spy)
+    want = areadist_oracle(pts_pd, layer).sort_values("PKEY") \
+        .reset_index(drop=True)
+    for run in (lambda: areadist(pts, pls), lambda: areadist_fused(pts, pls)):
+        got = run().toPandas().sort_values("PKEY").reset_index(drop=True)
+        assert built[-1].count() == 0
+        for c in ("NEAR_DIST", "AREA150", "PROP150", "MEANAGE_150",
+                  "AREA565", "PROP565", "MEANAGE_565"):
+            np.testing.assert_allclose(
+                got[c].to_numpy(float), want[c].to_numpy(float),
+                rtol=1e-9, atol=1e-9, equal_nan=True, err_msg=c)
+    assert len(built) == 2
+
+
+def test_entangled_layer_marker_and_fallback(spark):
+    """A 10-clique of rectangles (2^10 − 11 subsets > the kernel's term
+    budget) makes its (layer, tile) group emit the fallback marker;
+    the join path sends that layer to the raster union and still
+    matches the oracle, the fused path refuses it, and the other
+    layer's correction comes through exact."""
+    from extract_sf_r_parallel_spark.operators.areadist import (
+        _CORR_MARK, dissolve_corrections_df,
+    )
+    ox, oy = synth.X_LO + 300.0, synth.Y_LO + 300.0
+    box = np.array([[0, 0], [40, 0], [40, 30], [0, 30], [0, 0]], float)
+    rings = [box + [ox + k, oy + k] for k in range(10)]
+    layers = ["clique"] * 10
+    rings += [box + [ox + 3000, oy], box + [ox + 3020, oy]]
+    layers += ["pair", "pair"]
+    layer = pd.DataFrame({
+        "feature_id": np.arange(len(rings), dtype=np.int64),
+        "layer": layers, "YEAR": np.full(len(rings), 2000, np.int32),
+        "geom": [[r.ravel().tolist()] for r in rings],
+        "is_valid_truth": True,
+    })
+    pls = spark.createDataFrame(layer, LAYER_SCHEMA)
+    corr = dissolve_corrections_df(pls.select(
+        "feature_id", "layer", F.col("YEAR").alias("poly_year"),
+        "geom")).toPandas()
+    assert sorted(corr["layer"]) == [_CORR_MARK + "clique", "pair"]
+
+    pts_pd = pd.DataFrame([("0", "0", 2010, ox + 25.0, oy + 20.0),
+                           ("1", "0", 2010, ox + 3030.0, oy + 15.0)],
+                          columns=["PKEY", "SS", "YEAR", "x", "y"])
+    pts = spark.createDataFrame(pts_pd, PTS_SCHEMA)
+    got = areadist(pts, pls, temporal=False, age=False).toPandas() \
+        .sort_values(["PKEY", "layer"]).reset_index(drop=True)
+    want = areadist_oracle(pts_pd, layer, temporal=False, age=False) \
+        .sort_values(["PKEY", "layer"]).reset_index(drop=True)
+    for c in ("NEAR_DIST", "AREA150", "AREA565"):
+        np.testing.assert_allclose(got[c].to_numpy(float),
+                                   want[c].to_numpy(float),
+                                   rtol=1e-9, atol=1e-6, err_msg=c)
+    with pytest.raises(ValueError, match="raster dissolve fallback"):
+        areadist_fused(pts, pls, temporal=False, age=False)
+
+
+def test_duplicate_correction_ids_raise(spark, monkeypatch):
+    """The join path's id-uniqueness check over the checkpointed
+    corrections: a salt collision between two (layer, tile) groups
+    must fail loudly, not refine against the wrong ring."""
+    from extract_sf_r_parallel_spark.operators import areadist as A
+
+    ring = [[0.0, 0.0, 1.0, 0.0, 1.0, 1.0, 0.0, 0.0]]
+    colliding = spark.createDataFrame(
+        [(-5, "a", 2000, ring, -1.0), (-5, "b", 2000, ring, -1.0)],
+        "feature_id long, layer string, poly_year int, "
+        "geom array<array<double>>, weight double")
+    monkeypatch.setattr(A, "dissolve_corrections_df",
+                        lambda *a, **kw: colliding)
+    pls = spark.createDataFrame(synth.overlap_layer_pdf(), LAYER_SCHEMA)
+    with pytest.raises(ValueError, match="salt collision"):
+        A._FeatureSide(pls)
